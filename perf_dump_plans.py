@@ -1,8 +1,10 @@
 """Dump `.explain("formatted")` for a list of registered queries to
-plans/r12/<query>_<tag>.txt — the optimization round's plan-shape
-evidence (before/after). Usage:
+<out_dir>/<query>_<tag>.txt — plan-shape evidence for a change
+(before/after). Usage:
 
-    python perf_dump_plans.py <tag> <query> [<query> ...]
+    python perf_dump_plans.py <out_dir> <tag> <query> [<query> ...]
+
+e.g. `python perf_dump_plans.py plans/r14 before knn_topk_cosine`.
 
 Runs at $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]
 — the bench configuration, so plan shapes match the timed runs."""
@@ -21,12 +23,8 @@ from vector_search_ner_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "plans", "r12"
-    )
     os.makedirs(out_dir, exist_ok=True)
     queries, _ = registry.collect()
     spark = get_spark("vsns-plan-dump")

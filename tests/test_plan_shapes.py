@@ -11,6 +11,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
+
 from vector_search_ner_spark.registry import collect
 
 SF = "/root/testdata/sf0.01"
@@ -812,3 +814,27 @@ def test_reputation_report_is_one_pass(spark, sf_dir):
     tree = buf.getvalue().split("\n\n")[0]
     assert tree.count("Scan parquet") == 1, tree
     assert "HashAggregate" in tree, tree
+
+
+@pytest.mark.parametrize("fold", ["dot_product", "l2_distance"])
+def test_vector_fold_casts_simplify_over_double(spark, fold):
+    """The folds cast each element to double inside the zip_with lambda;
+    over array<double> the optimizer's SimplifyCasts must drop those
+    casts (the reason no separate no-cast fold exists), while over
+    array<float> the widening casts stay."""
+    from pyspark.sql import functions as F
+
+    from vector_search_ner_spark.functions import vector as V
+
+    for elem, casts_kept in (("double", False), ("float", True)):
+        df = spark.range(2).select(
+            F.array(F.col("id").cast(elem), F.lit(1.0).cast(elem)).alias("a"),
+            F.array(F.lit(2.0).cast(elem), F.col("id").cast(elem)).alias("b"),
+        )
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.select(getattr(V, fold)(F.col("a"), F.col("b"))).explain("extended")
+        optimized = buf.getvalue().split("== Optimized Logical Plan ==")[1]
+        optimized = optimized.split("== Physical Plan ==")[0]
+        lambda_body = optimized.split("zip_with(")[1].split("lambdafunction(")[1]
+        assert ("cast(lambda" in lambda_body) == casts_kept, (elem, optimized)

@@ -1,21 +1,26 @@
 """Vector distance/similarity column expressions.
 
 All pure built-in higher-order functions (`zip_with` + `aggregate`) so
-they run JVM-side — no Python UDF in the k-NN hot path. This replaces
-the reference's hnswlib distance kernels
-(`/root/reference/main.py:158-165` `similarity_search_with_score`,
-L2-over-HNSW) with exact distributed computation.
+they run JVM-side. This replaces the reference's hnswlib distance
+kernels (its `main.py:158-165` `similarity_search_with_score`,
+L2-over-HNSW) with exact distributed computation. The folds define
+the semantics and serve candidate-list-sized frames;
+`operators/veckernel.py` holds their bit-identical Arrow twins for
+pair-join-sized frames, under the same contract.
 
-Honest performance note: Spark evaluates higher-order functions with
+Contract: a NULL vector on either side, a ragged pair (different
+lengths) or a NULL element gives NULL; an empty pair gives 0.0; a
+zero-norm cosine gives 0.0.
+
+Performance note: Spark evaluates higher-order functions with
 INTERPRETED expression eval (they are CodegenFallback, outside
-whole-stage codegen), so per-element expression-node count is the cost
-driver. Hot paths therefore pre-cast vectors to `array<double>` once
-(at store build / probe prep) and fold with `dot_product_nc`, which
-drops the two per-element casts — measured ~30% faster on a 60k-pair
-scan, bit-identical result (casting each element once versus at every
-use produces the same double). An unrolled 64-term `a[0]*b[0]+…`
-expression was tried and is ~3× SLOWER than the interpreted fold (the
-giant codegen tree defeats JIT), so the fold stays.
+whole-stage codegen), so the per-element expression-node count sets
+the cost. Over `array<double>` inputs the optimizer's SimplifyCasts
+already drops the per-element casts inside the lambdas, so pre-casting
+a vector once (`to_double_array`) is all a hot path needs. An unrolled
+64-term `a[0]*b[0]+…` expression was tried and is ~3× SLOWER than the
+interpreted fold (the giant codegen tree defeats JIT), so the fold
+stays.
 
 Determinism note: `aggregate` folds the array sequentially
 left-to-right over DOUBLE, so scores are bit-reproducible across
@@ -45,13 +50,6 @@ def to_double_array(a: Column) -> Column:
     return F.transform(a, lambda x: x.cast("double"))
 
 
-def dot_product_nc(a: Column, b: Column) -> Column:
-    """Dot product of two array<double> columns — the no-cast twin of
-    `dot_product` for pre-cast vectors (same left-to-right fold, bit-
-    identical result, ~30% fewer interpreted expression nodes)."""
-    return _fold_sum(F.zip_with(a, b, lambda x, y: x * y))
-
-
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot_product(a, a))
 
@@ -63,22 +61,10 @@ def l2_distance(a: Column, b: Column) -> Column:
     return F.sqrt(_fold_sum(diffs))
 
 
-def l2_distance_nc(a: Column, b: Column) -> Column:
-    """L2 over pre-cast array<double> — bit-identical to `l2_distance`
-    and drops FOUR interpreted casts per element (the squared-diff
-    lambda evaluates each cast twice)."""
-    diffs = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.sqrt(_fold_sum(diffs))
-
-
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine similarity; 0.0 when either vector has zero norm."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot_product(a, b) / denom)
-
-
-def cosine_distance(a: Column, b: Column) -> Column:
-    return F.lit(1.0) - cosine_similarity(a, b)
 
 
 # ---------------------------------------------------------------------------
@@ -87,11 +73,19 @@ def cosine_distance(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def duck_dot(a: str, b: str) -> str:
+def _duck_fold(a: str, b: str, term: str) -> str:
+    """Sequential sum of `term` over index i, under the folds' contract:
+    `list_sum` alone skips NULL elements, reads past a shorter list as
+    NULL terms it also skips, and sums an empty list to NULL."""
     return (
-        f"list_sum(list_transform(generate_series(1, len({a})), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
+        f"CASE WHEN len({a}) = len({b}) AND list_count({a}) = len({a}) "
+        f"AND list_count({b}) = len({b}) THEN coalesce(list_sum(list_transform("
+        f"generate_series(1, len({a})), i -> {term})), 0.0) END"
     )
+
+
+def duck_dot(a: str, b: str) -> str:
+    return _duck_fold(a, b, f"CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)")
 
 
 def duck_norm(a: str) -> str:
@@ -106,8 +100,5 @@ def duck_cosine(a: str, b: str) -> str:
 
 
 def duck_l2(a: str, b: str) -> str:
-    return (
-        f"sqrt(list_sum(list_transform(generate_series(1, len({a})), "
-        f"i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)) "
-        f"* (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)))))"
-    )
+    diff = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
+    return f"sqrt({_duck_fold(a, b, f'{diff} * {diff}')})"

@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vector_search_ner_spark.functions.vector import l2_distance
 from vector_search_ner_spark.operators.knn import topk_per_query
 
 SEED = 42
@@ -67,7 +66,7 @@ def ivf_topk(
     # pre-cast each side ONCE (below the join); probe assignment and
     # the candidate-set distance run in the Arrow kernels — both were
     # interpreted folds (bit-identical swap, see veckernel; sqrt
-    # matches the retired l2_distance_nc ordering exactly)
+    # matches the retired l2_distance ordering exactly)
     queries = queries.withColumn("__qv", to_double_array(F.col(query_vec)))
     probes = veckernel.assign_topm(
         queries.select(query_id, "__qv"), centroids, nprobe, "__qv", sqrt=True

@@ -9,10 +9,10 @@ Design for scale (100 TB doc side, small query batch):
     InferWindowGroupLimit rule (3.5+) turns this into a per-partition
     partial top-k (WindowGroupLimit) BEFORE the shuffle, so only
     ~k rows per partition per query move — not |docs| × |queries|.
-  * metric exprs are built-in higher-order functions (JVM-side, no
-    UDF; they evaluate interpreted — see functions/vector.py — so both
-    vector sides are pre-cast to array<double> once per row to keep
-    the per-pair node count minimal).
+  * the per-pair score runs in the Arrow kernels of
+    operators/veckernel.py (bit-identical to the folds of
+    functions/vector.py); both vector sides are pre-cast to
+    array<double> once per row.
 
 Semantics notes vs the reference:
   * exact, not approximate — recall 1.0 (declared improvement; see
@@ -26,27 +26,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from vector_search_ner_spark.functions.vector import (
-    cosine_similarity,
-    dot_product,
-    l2_distance,
-)
-
-_METRICS = {
-    # name -> (expr builder, ascending order?)
-    "cosine": (cosine_similarity, False),
-    "dot": (dot_product, False),
-    "l2": (l2_distance, True),
-}
-
-
-def score_expr(metric: str, qcol: Column, dcol: Column) -> tuple[Column, bool]:
-    try:
-        builder, asc = _METRICS[metric]
-    except KeyError:
-        raise ValueError(f"unknown metric {metric!r}; choose from {sorted(_METRICS)}")
-    return builder(qcol, dcol), asc
-
 
 def topk_per_query(
     scored: DataFrame,
@@ -56,9 +35,10 @@ def topk_per_query(
     doc_id: str = "doc_id",
     ascending: bool = False,
 ) -> DataFrame:
-    """Per-query top-k with deterministic doc-id tie-break."""
+    """Per-query top-k with deterministic doc-id tie-break; a NULL
+    score ranks last in either direction, as in the DuckDB oracles."""
     order = [
-        F.col(score_col).asc() if ascending else F.col(score_col).desc(),
+        F.col(score_col).asc_nulls_last() if ascending else F.col(score_col).desc(),
         F.col(doc_id).asc(),
     ]
     w = Window.partitionBy(query_id).orderBy(*order)
@@ -108,9 +88,8 @@ def knn_join(
         # |q| once per query row — not once per (query, doc) pair.
         docs = docs.withColumn("__dnorm", l2_norm(F.col(doc_vec)))
         queries = queries.withColumn("__qnorm", l2_norm(F.col(query_vec)))
-        denom = F.col("__qnorm") * F.col("__dnorm")
-        expr = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-            vk.pair_dot(F.col("__qv"), F.col("__dv")) / denom
+        expr = vk.cosine_from_norms(
+            F.col("__qv"), F.col("__dv"), F.col("__qnorm"), F.col("__dnorm")
         )
         asc = False
     elif metric == "dot":
@@ -118,7 +97,7 @@ def knn_join(
     elif metric == "l2":
         expr, asc = F.sqrt(vk.pair_sqdist(F.col("__qv"), F.col("__dv"))), True
     else:
-        expr, asc = score_expr(metric, F.col(query_vec), F.col(doc_vec))
+        raise ValueError(f"unknown metric {metric!r}; choose from ['cosine', 'dot', 'l2']")
     scored = (
         docs.crossJoin(F.broadcast(queries))
         .withColumn(score_col, expr)

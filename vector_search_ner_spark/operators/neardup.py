@@ -716,9 +716,8 @@ def cosine_neardup_pairs(
     )
     a = probes.alias("a")
     b = with_b.alias("b")
-    denom = F.col("a.nrm") * F.col("b.nrm")
-    cos = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        vk.pair_dot(F.col("a.v"), F.col("b.v")) / denom
+    cos = vk.cosine_from_norms(
+        F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")
     )
     return (
         a.join(b, (F.col("a.probe") == F.col("b.bucket")) & (F.col("a.sid") < F.col("b.sid")))
@@ -920,9 +919,8 @@ def ivf_cosine_neardup_pairs(
         l2_norm(F.col(vec_col)).alias("nrm"),  # once per row, not per pair
     )
     x, y = wb.alias("x"), wb.alias("y")
-    denom = F.col("x.nrm") * F.col("y.nrm")
-    cos = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        vk.pair_dot(F.col("x.v"), F.col("y.v")) / denom
+    cos = vk.cosine_from_norms(
+        F.col("x.v"), F.col("y.v"), F.col("x.nrm"), F.col("y.nrm")
     )
     return (
         cand.join(x, cand["doc_a"] == F.col("x.sid"))

@@ -31,6 +31,8 @@ keep centroid rows sorted by cluster_id and use first-occurrence
 argmin / stable argsort, matching `MIN(struct(dist, cluster_id))`
 and `row_number() OVER (ORDER BY dist, cluster_id)`.
 
+The pair kernels follow the folds' NULL contract (functions/vector.py).
+
 CENTROID COLLECTION: `assign_topm` collects the centroid frame to
 the driver — NOTE: this is an EAGER action at plan-construction time,
 so operator builders calling it are not lazy — one O(n_cent) job,
@@ -48,6 +50,7 @@ compute, and it becomes per-row vectorized compute).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType
@@ -82,14 +85,18 @@ def _sqdist_block(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     return D
 
 
-def _list_to_matrix(col) -> np.ndarray:
+def _list_to_matrix(col, name: str) -> np.ndarray:
     """pyarrow List/FixedSizeList column -> (n, dim) float64 matrix.
-    float32 widens exactly; rows must be equal-length (they are: the
-    embedding tables are fixed-dim)."""
+    float32 widens exactly. A NULL or ragged row would shift every
+    later vector in the reshape, so it is rejected instead."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
+    lens = pc.min_max(pc.list_value_length(col)).as_py()
+    if col.null_count or lens["min"] != lens["max"]:
+        raise ValueError(f"assign_topm: column {name!r} holds NULL or ragged vectors")
     flat = np.asarray(col.flatten(), dtype=np.float64)
     n = len(col)
     if n == 0:
@@ -152,7 +159,7 @@ def assign_topm(
             n = rb.num_rows
             if n == 0:
                 continue
-            X = _list_to_matrix(rb.column(vec_idx))
+            X = _list_to_matrix(rb.column(vec_idx), vec_col)
             idx_parts = []
             dist_parts = []
             for s in range(0, n, chunk_rows):
@@ -210,36 +217,38 @@ def _seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     return acc
 
 
-@F.pandas_udf(DoubleType())
-def _pair_cosine_udf(a, b):
-    import pandas as pd
-
-    A, B = _stack(a), _stack(b)
-    na = np.sqrt(_seq_dot(A, A))
-    nb = np.sqrt(_seq_dot(B, B))
-    denom = na * nb
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cos = _seq_dot(A, B) / denom
-    return pd.Series(np.where(denom == 0.0, 0.0, cos))
-
-
-@F.pandas_udf(DoubleType())
-def _pair_sqdist_udf(a, b):
-    import pandas as pd
-
-    A, B = _stack(a), _stack(b)
+def _seq_sqdist(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise squared L2, same per-dimension order as `_seq_dot`."""
     acc = np.zeros(A.shape[0], dtype=np.float64)
     for d in range(A.shape[1]):
         t = A[:, d] - B[:, d]
         acc += t * t
-    return pd.Series(acc)
+    return acc
 
 
-@F.pandas_udf(DoubleType())
-def _pair_dot_udf(a, b):
-    import pandas as pd
+def _stack_pair(a, b) -> tuple[np.ndarray, np.ndarray] | None:
+    """Both sides as equal-shape (n, dim) float64 matrices — the fast
+    path — or None when the batch holds a NULL vector or vectors of
+    differing length, which then take `_masked`. A NULL element
+    arrives as NaN and propagates to NaN (NULL) like the fold's NULL."""
+    try:
+        A, B = _stack(a), _stack(b)
+    except (ValueError, TypeError):
+        return None
+    return (A, B) if A.shape == B.shape else None
 
-    return pd.Series(_seq_dot(_stack(a), _stack(b)))
+
+def _masked(a, b, kernel) -> np.ndarray:
+    """Per-row fallback of a row-wise `kernel(A, B)`: NaN where either
+    vector is NULL or the pair is ragged (the fold's NULL — Arrow turns
+    NaN into NULL), the kernel over each equal-length group elsewhere."""
+    la = np.fromiter((-1 if v is None else len(v) for v in a), np.int64, len(a))
+    lb = np.fromiter((-1 if v is None else len(v) for v in b), np.int64, len(b))
+    out = np.full(len(a), np.nan)
+    for dim in np.unique(la[(la == lb) & (la >= 0)]):
+        rows = np.flatnonzero((la == dim) & (lb == dim))
+        out[rows] = kernel(_stack(a.iloc[rows]), _stack(b.iloc[rows]))
+    return out
 
 
 def simhash_bits(hashes: Column | str, n_bits: int) -> Column:
@@ -250,7 +259,6 @@ def simhash_bits(hashes: Column | str, n_bits: int) -> Column:
     interpreted transform+aggregate folds per row (the dominant cost
     of the simhash fingerprint pass) with one vectorized segment-sum
     pass over the batch."""
-    import pandas as pd
 
     @F.pandas_udf(LongType())
     def fn(col):
@@ -281,8 +289,6 @@ def sign_bucket(vec: Column | str, hyperplanes: list[list[float]]) -> Column:
     pattern of dot products with fixed hyperplanes. Each dot
     accumulates per-dimension in index order (bit-identical to the
     interpreted fold); the bucket assembly is integer-exact."""
-    import pandas as pd
-
     hps = np.asarray(hyperplanes, dtype=np.float64)
 
     @F.pandas_udf(IntegerType())
@@ -290,28 +296,49 @@ def sign_bucket(vec: Column | str, hyperplanes: list[list[float]]) -> Column:
         X = _stack(col)
         bucket = np.zeros(X.shape[0], dtype=np.int64)
         for r in range(hps.shape[0]):
-            acc = np.zeros(X.shape[0], dtype=np.float64)
-            for d in range(hps.shape[1]):
-                acc += X[:, d] * hps[r, d]
+            acc = _seq_dot(X, np.broadcast_to(hps[r], X.shape))
             bucket += np.where(acc > 0.0, np.int64(1) << r, 0)
         return pd.Series(bucket.astype(np.int32))
 
     return fn(vec)
 
 
-def pair_cosine(a: Column | str, b: Column | str) -> Column:
+@F.pandas_udf(DoubleType())
+def pair_cosine(a, b):
     """Arrow twin of functions.vector.cosine_similarity: same float64
     op sequence (dot / (sqrt(dot_aa) * sqrt(dot_bb)), zero-norm -> 0.0),
     vectorized over the batch. Drop-in Column replacement on pair-join
-    hot paths; results are bit-identical, so oracles are unchanged."""
-    return _pair_cosine_udf(a, b)
+    hot paths; results are bit-identical, so oracles are unchanged.
+    The norms of a ragged pair are each side's own, as in the fold."""
+    AB = _stack_pair(a, b)
+    if AB is not None:
+        A, B = AB
+        dot, saa, sbb = _seq_dot(A, B), _seq_dot(A, A), _seq_dot(B, B)
+    else:
+        dot, saa, sbb = (_masked(x, y, _seq_dot) for x, y in ((a, b), (a, a), (b, b)))
+    denom = np.sqrt(saa) * np.sqrt(sbb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return pd.Series(np.where(denom == 0.0, 0.0, dot / denom))
 
 
-def pair_sqdist(a: Column | str, b: Column | str) -> Column:
+@F.pandas_udf(DoubleType())
+def pair_sqdist(a, b):
     """Arrow twin of the squared-L2 fold (no sqrt)."""
-    return _pair_sqdist_udf(a, b)
+    AB = _stack_pair(a, b)
+    return pd.Series(_seq_sqdist(*AB) if AB is not None else _masked(a, b, _seq_sqdist))
 
 
-def pair_dot(a: Column | str, b: Column | str) -> Column:
+@F.pandas_udf(DoubleType())
+def pair_dot(a, b):
     """Arrow twin of functions.vector.dot_product."""
-    return _pair_dot_udf(a, b)
+    AB = _stack_pair(a, b)
+    return pd.Series(_seq_dot(*AB) if AB is not None else _masked(a, b, _seq_dot))
+
+
+def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """cosine_similarity over hoisted norms: `na`/`nb` are the per-row
+    `l2_norm` columns (computed once per row, not per pair) and the
+    pair dot runs in the kernel. The one place that spells the
+    zero-norm rule and the op order `duck_cosine` mirrors."""
+    denom = na * nb
+    return F.when(denom == 0.0, F.lit(0.0)).otherwise(pair_dot(a, b) / denom)

@@ -875,9 +875,8 @@ def semcon_flags(t: DataFrame, b: DataFrame) -> DataFrame:
     verbatim."""
     from vector_search_ner_spark.operators import veckernel as vk
 
-    denom = F.col("tnrm") * F.col("bnrm")
-    cos = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        vk.pair_dot(F.col("tv"), F.col("bv")) / denom
+    cos = vk.cosine_from_norms(
+        F.col("tv"), F.col("bv"), F.col("tnrm"), F.col("bnrm")
     )
     flagged = (
         t.crossJoin(F.broadcast(b))
@@ -1591,9 +1590,8 @@ def dedup_cosine_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm(F.col("embedding")).alias("nrm"),
     ).localCheckpoint()
     a, b = wb.alias("a"), wb.alias("b")
-    denom = F.col("a.nrm") * F.col("b.nrm")
-    cos = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        vk.pair_dot(F.col("a.v"), F.col("b.v")) / denom
+    cos = vk.cosine_from_norms(
+        F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")
     )
     pairs = (
         a.join(F.broadcast(b), F.col("a.sid") < F.col("b.sid"))
@@ -1770,9 +1768,8 @@ def _ivf_eval_curve_frame(
         l2_norm(F.col("embedding")).alias("nrm"),
     ).localCheckpoint()
     pa, pb = wb.alias("a"), wb.alias("b")
-    denom = F.col("a.nrm") * F.col("b.nrm")
-    cos = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        vk.pair_dot(F.col("a.v"), F.col("b.v")) / denom
+    cos = vk.cosine_from_norms(
+        F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")
     )
     pairs = (
         pa.join(F.broadcast(pb), F.col("a.sid") < F.col("b.sid"))

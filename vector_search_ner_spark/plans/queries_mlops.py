@@ -306,7 +306,7 @@ def ann_lsh_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance, so precision is 1.0 by construction — recall is the only
     free variable, and it is now hash-checked. The oracle re-derives
     the exact pairs and the all-true verdict."""
-    from vector_search_ner_spark.functions.vector import l2_distance_nc, to_double_array
+    from vector_search_ner_spark.functions.vector import l2_distance, to_double_array
 
     emb = load_table(spark, sf_dir, "embeddings")
     lsh_pairs = ann.lsh_similarity_join(emb, threshold=1.1).select("doc_a", "doc_b")
@@ -319,7 +319,7 @@ def ann_lsh_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it feeds the verdict aggregate AND the returned report
     exact = cut_lineage(
         a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
-        .withColumn("__l2", l2_distance_nc(F.col("a.__dv"), F.col("b.__dv")))
+        .withColumn("__l2", l2_distance(F.col("a.__dv"), F.col("b.__dv")))
         .where(F.col("__l2") <= 1.1)
         .select(
             F.col("a.vec_id").alias("doc_a"),

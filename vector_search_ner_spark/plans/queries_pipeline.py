@@ -70,8 +70,6 @@ from pyspark.storagelevel import StorageLevel
 from vector_search_ner_spark.embedder import HashingEmbedder
 from vector_search_ner_spark.operators import veckernel as vk
 from vector_search_ner_spark.functions.vector import (
-    dot_product,
-    dot_product_nc,
     duck_cosine,
     l2_norm,
     to_double_array,
@@ -291,14 +289,10 @@ def _scored_relation(spark: SparkSession, sf_dir: str, probes: DataFrame) -> Dat
     # fingerprint, then a plain parquet scan — the reference never
     # re-embeds a document at query time, and neither do we)
     docs = doc_vector_store(spark, sf_dir)
-    denom = F.col("__pnorm") * F.col("__dnorm")
     # probe-dot in the Arrow pair kernel: this crossJoin is corpus x
-    # probe-batch sized (the one data-sized stage of the lattice), so
-    # the batch kernel amortizes — the hoisted JVM norms and the final
-    # division keep the exact float op order of the retired interpreted
-    # fold (veckernel bit-identity contract)
-    score = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        vk.pair_dot(F.col("pvec_d"), F.col("dvec_d")) / denom
+    # probe-batch sized (the one data-sized stage of the lattice)
+    score = vk.cosine_from_norms(
+        F.col("pvec_d"), F.col("dvec_d"), F.col("__pnorm"), F.col("__dnorm")
     )
     return (
         docs.crossJoin(F.broadcast(probes))
@@ -759,14 +753,10 @@ def staged_retrieval_v1_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dvec_d",
         "__dnorm",
     )
-    denom = F.col("__pnorm") * F.col("__dnorm")
     # probe-dot in the Arrow pair kernel: this crossJoin is corpus x
-    # probe-batch sized (the one data-sized stage of the lattice), so
-    # the batch kernel amortizes — the hoisted JVM norms and the final
-    # division keep the exact float op order of the retired interpreted
-    # fold (veckernel bit-identity contract)
-    score = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        vk.pair_dot(F.col("pvec_d"), F.col("dvec_d")) / denom
+    # probe-batch sized (the one data-sized stage of the lattice)
+    score = vk.cosine_from_norms(
+        F.col("pvec_d"), F.col("dvec_d"), F.col("__pnorm"), F.col("__dnorm")
     )
     scored = (
         docs.crossJoin(F.broadcast(probes))

@@ -141,7 +141,7 @@ def similarity_full_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_similarity_full_scan_jvm_rank.
     Deterministic because (distance, doc_id) is a total order."""
     from pyspark.sql import Window
-    from vector_search_ner_spark.functions.vector import l2_distance_nc, to_double_array
+    from vector_search_ner_spark.functions.vector import l2_distance, to_double_array
 
     emb = load_table(spark, sf_dir, "embeddings").withColumn(
         "__dv", to_double_array(F.col("embedding"))
@@ -151,7 +151,7 @@ def similarity_full_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.crossJoin(F.broadcast(q))
         .select(
             F.col("vec_id").alias("doc_id"),
-            l2_distance_nc(F.col("__qv"), F.col("__dv")).alias("distance"),
+            l2_distance(F.col("__qv"), F.col("__dv")).alias("distance"),
         )
         .orderBy(F.col("distance").asc(), F.col("doc_id").asc())
         .withColumn("__pid", F.spark_partition_id())
