@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -177,24 +178,19 @@ def test_similarity_full_scan_jvm_rank(spark):
 
 def test_staged_pipelines_stay_jvm_side(spark):
     """Both retrieval pipelines must keep ALL lattice logic JVM-side:
-    the only Python in the plan is the Arrow-batched embedder
-    (ArrowEvalPython), never row-at-a-time BatchEvalPython; and the
-    slim scored relation must be persisted (InMemoryTableScan /
-    TableCacheQueryStage) so the stage branches share one
-    materialization."""
-    queries, _ = collect()
-    for name in (
-        "staged_retrieval_pipeline",
-        "staged_retrieval_v1_hybrid",
-        "chat_pipeline_e2e",
+    the only Python in the plan is Arrow-batched — the v1 embedder
+    (ArrowEvalPython) or the v2 candidate pass (MapInArrow) — never
+    row-at-a-time BatchEvalPython; and the slim scored relation must
+    be persisted (InMemoryTableScan / TableCacheQueryStage) so the
+    stage branches share one materialization."""
+    for name, arrow_node in (
+        ("staged_retrieval_pipeline", "MapInArrow"),
+        ("staged_retrieval_v1_hybrid", "ArrowEvalPython"),
+        ("chat_pipeline_e2e", "MapInArrow"),
     ):
-        df = queries[name](spark, SF)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        p = buf.getvalue()
+        p = _plan(spark, name)
         assert "BatchEvalPython" not in p, (name, p)
-        assert "ArrowEvalPython" in p, (name, p)
+        assert arrow_node in p, (name, p)
         assert "InMemoryTableScan" in p or "TableCacheQueryStage" in p, (name, p)
 
 
@@ -316,16 +312,21 @@ def test_interpolate_single_sort_no_join(spark):
     assert p.count("Exchange") <= 4, p
 
 
-def test_topk_lattice_plans_window_group_limits(spark):
-    """The scale formulation of the staged lattice must plan a
-    WindowGroupLimit for every stage rank (per-partition top-K heap
-    BEFORE the exchange — only ~K rows per partition per stage reach
-    any shuffle; the single-pass variant's global per-query sort is
-    exactly what this shape avoids at 100 TB), and its deficit gates
-    must be broadcast joins of the tiny count frames."""
-    p = _plan(spark, "staged_retrieval_topk_scale")
-    assert p.count("WindowGroupLimit") >= 5, p
-    assert "BroadcastHashJoin" in p, p
+def test_v2_lattice_scores_the_store_in_one_arrow_pass(spark):
+    """The v2 lattice scores the corpus in ONE map-only MapInArrow pass
+    that reads the vector store scan directly and keeps only each
+    block's stage candidates — no probe x corpus join of any kind, so
+    no corpus-sized relation reaches a shuffle or a sort."""
+    for name in ("staged_retrieval_pipeline", "chat_pipeline_e2e"):
+        p = _plan(spark, name)
+        assert "BroadcastNestedLoopJoin" not in p, (name, p)
+        assert "CartesianProduct" not in p, (name, p)
+        arrow_in = re.search(r"\(\d+\) MapInArrow\nInput \[\d+\]: (\[.*\])", p)
+        store_out = re.search(
+            r"\(\d+\) Scan parquet *\nOutput \[\d+\]: (\[.*\])\n.*\nLocation: [^\n]*/vecstore/", p
+        )
+        assert arrow_in and store_out, (name, p)
+        assert arrow_in.group(1) == store_out.group(1), (name, p)
 
 
 def test_mixture_quota_plans_window_group_limit(spark):

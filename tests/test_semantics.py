@@ -852,29 +852,6 @@ def test_stream_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     assert landed.select("event_id").distinct().count() == ev.count()  # no dups
 
 
-def test_topk_lattice_equals_single_pass(spark, sf_dir):
-    """The per-stage WindowGroupLimit lattice and the single-pass
-    cumulative-sum lattice must produce IDENTICAL results (same stage
-    sets, same gate decisions, same fusion ranks) — they are two
-    physical strategies for one logical operator."""
-    from vector_search_ner_spark.registry import collect
-
-    qs, _ = collect()
-    a = [
-        (r.query_id, r.doc_id, r.combined_score, r.rank)
-        for r in qs["staged_retrieval_pipeline"](spark, sf_dir)
-        .orderBy("query_id", "rank")
-        .collect()
-    ]
-    b = [
-        (r.query_id, r.doc_id, r.combined_score, r.rank)
-        for r in qs["staged_retrieval_topk_scale"](spark, sf_dir)
-        .orderBy("query_id", "rank")
-        .collect()
-    ]
-    assert a == b
-
-
 def test_embedder_unicode_whitespace_contract(spark):
     """Unicode whitespace (NBSP, LINE SEP) must NOT split tokens on
     either embedder path: Python's default str.split() would split on

@@ -103,3 +103,46 @@ def test_list_to_matrix_rejects_null_or_ragged_rows(vectors):
     with pytest.raises(ValueError, match="'emb'"):
         vk._list_to_matrix(pa.array(vectors, pa.list_(pa.float64())), "emb")
     assert vk._list_to_matrix(pa.array([[1.0, 2.0], [3.0, 4.0]]), "emb").shape == (2, 2)
+
+
+def test_cosine_block_equals_cosine_from_norms(spark):
+    """The lattice's block kernel (`_cosine_block`: `_dot_block` plus
+    the zero-norm rule) equals `cosine_from_norms` and the fold's
+    `cosine_similarity` bit for bit on float32 vectors widened to
+    float64, a zero-norm doc and a zero-norm probe included."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    X = rng.standard_normal((9, 64)).astype(np.float32)
+    Q = rng.standard_normal((4, 64)).astype(np.float32)
+    X[2] = 0.0
+    Q[1] = 0.0
+    docs = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(X)], "d int, dvec array<float>"
+    ).select("d", "dvec", V.l2_norm(F.col("dvec")).alias("dnorm"))
+    probes = spark.createDataFrame(
+        [(j, v.tolist()) for j, v in enumerate(Q)], "p int, pvec array<float>"
+    ).select("p", "pvec", V.l2_norm(F.col("pvec")).alias("pnorm"))
+    pd_, dd = V.to_double_array(F.col("pvec")), V.to_double_array(F.col("dvec"))
+    rows = (
+        docs.crossJoin(probes)
+        .select(
+            "d",
+            "p",
+            "dnorm",
+            "pnorm",
+            vk.cosine_from_norms(pd_, dd, F.col("pnorm"), F.col("dnorm")).alias("kernel"),
+            V.cosine_similarity(F.col("pvec"), F.col("dvec")).alias("fold"),
+        )
+        .collect()
+    )
+    dnorm = np.zeros(len(X))
+    pnorm = np.zeros(len(Q))
+    for r in rows:
+        dnorm[r["d"]], pnorm[r["p"]] = r["dnorm"], r["pnorm"]
+    block = vk._cosine_block(X.astype(np.float64), Q.astype(np.float64), dnorm, pnorm)
+    assert len(rows) == block.size
+    for r in rows:
+        got = float(block[r["d"], r["p"]])
+        assert got == r["kernel"] == r["fold"], (r, got)
+    assert (block[2] == 0.0).all() and (block[:, 1] == 0.0).all()

@@ -656,77 +656,6 @@ def simhash_pairs(
     return hamming_band_pairs(fps, max_hamming)
 
 
-# multi-probe masks: the exact bucket plus every Hamming-1 and
-# Hamming-2 neighbor (one or two hyperplane verdicts flipped).
-# Single-probe sign-LSH over 4 hyperplanes only recalls p^4 of true
-# pairs (measured 0.125 on the fixture at cosine>=0.4, where
-# p = 1 - theta/pi ~ 0.63); flip-1 probing lifts that to
-# p^4 + 4p^3(1-p) (measured 0.60 at sf0.01, the figure pinned in
-# `dedup_cosine_eval_report`'s floor test and COVERAGE.md); flip-2
-# adds the 6 two-bit neighbors for + 6p^2(1-p)^2, measured >= 0.8 on
-# the fixture — the standard multi-probe LSH trade of probes for
-# tables (Lv et al., "Multi-Probe LSH", VLDB 2007). The eval report
-# emits the full depth-0/1/2 recall-vs-candidates curve; the
-# production pairs op uses the deepest tier. At a low threshold like
-# cosine>=0.4 a 4-plane sketch is inherently coarse — high recall
-# costs a large candidate fraction (the curve quantifies exactly how
-# much); corpora with tighter thresholds keep far more selectivity
-# from the same masks.
-_FLIP1 = tuple(1 << r for r in range(len(HYPERPLANES)))
-_FLIP2 = tuple(
-    (1 << r) | (1 << s)
-    for r in range(len(HYPERPLANES))
-    for s in range(r + 1, len(HYPERPLANES))
-)
-MULTIPROBE_MASKS: tuple[int, ...] = (0,) + _FLIP1 + _FLIP2
-
-
-def cosine_neardup_pairs(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding near-dup pairs: multi-probe sign-LSH prefilter
-    (map-only bucket id; the probing side expands to its flip-1 and
-    flip-2 neighbor buckets, shuffle on bucket) -> exact cosine on
-    candidate pairs. A pair matches AT MOST ONE probe mask (the mask
-    is determined by the buckets' XOR), so no candidate dedup is
-    needed. Bucket id and the per-pair verify dot run in the Arrow
-    kernels (bit-identical — veckernel contract)."""
-    from vector_search_ner_spark.functions.vector import l2_norm
-    from vector_search_ner_spark.operators import veckernel as vk
-
-    with_b = emb.select(
-        F.col(id_col).alias("sid"),
-        F.col(vec_col).alias("v"),
-        vk.sign_bucket(F.col(vec_col), HYPERPLANES).alias("bucket"),
-        l2_norm(F.col(vec_col)).alias("nrm"),  # once per row, not per pair
-    )
-    probes = with_b.select(
-        "sid",
-        "v",
-        "nrm",
-        F.explode(
-            F.array(*[F.lit(m) for m in MULTIPROBE_MASKS])
-        ).alias("m"),
-        F.col("bucket"),
-    ).select(
-        "sid", "v", "nrm", F.col("bucket").bitwiseXOR(F.col("m")).alias("probe")
-    )
-    a = probes.alias("a")
-    b = with_b.alias("b")
-    cos = vk.cosine_from_norms(
-        F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")
-    )
-    return (
-        a.join(b, (F.col("a.probe") == F.col("b.bucket")) & (F.col("a.sid") < F.col("b.sid")))
-        .withColumn("cosine", F.round(cos, 4))
-        .where(F.col("cosine") >= threshold)
-        .select(F.col("a.sid").alias("doc_a"), F.col("b.sid").alias("doc_b"), "cosine")
-    )
-
-
 # production IVF near-dup knob: Lloyd-learned coarse quantizer sized
 # FROM THE CORPUS (round 12 — the round-11 fixed ncent=64 was a
 # measured quadratic trap at scale: perf_scale_r11ops showed 34x wall

@@ -85,6 +85,25 @@ def _sqdist_block(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     return D
 
 
+def _dot_block(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """(n, dim) x (k, dim) -> (n, k) dot products, accumulated
+    per-dimension in index order — bit-identical to the sequential
+    `aggregate(zip_with(a, b, x*y), 0.0, +)` fold for every pair."""
+    D = np.zeros((X.shape[0], Q.shape[0]), dtype=np.float64)
+    for d in range(X.shape[1]):
+        D += X[:, d, None] * Q[None, :, d]
+    return D
+
+
+def _cosine_block(X: np.ndarray, Q: np.ndarray, xnorm: np.ndarray, qnorm: np.ndarray) -> np.ndarray:
+    """(n, k) cosine of every (X row, Q row) pair from hoisted norms —
+    `cosine_from_norms` over a block: `qnorm * xnorm`, then 0.0 where
+    that product is 0, else the sequential dot over it."""
+    denom = qnorm[None, :] * xnorm[:, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom == 0.0, 0.0, _dot_block(X, Q) / denom)
+
+
 def _list_to_matrix(col, name: str) -> np.ndarray:
     """pyarrow List/FixedSizeList column -> (n, dim) float64 matrix.
     float32 widens exactly. A NULL or ragged row would shift every
@@ -96,7 +115,7 @@ def _list_to_matrix(col, name: str) -> np.ndarray:
         col = col.combine_chunks()
     lens = pc.min_max(pc.list_value_length(col)).as_py()
     if col.null_count or lens["min"] != lens["max"]:
-        raise ValueError(f"assign_topm: column {name!r} holds NULL or ragged vectors")
+        raise ValueError(f"column {name!r} holds NULL or ragged vectors")
     flat = np.asarray(col.flatten(), dtype=np.float64)
     n = len(col)
     if n == 0:
@@ -339,6 +358,7 @@ def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """cosine_similarity over hoisted norms: `na`/`nb` are the per-row
     `l2_norm` columns (computed once per row, not per pair) and the
     pair dot runs in the kernel. The one place that spells the
-    zero-norm rule and the op order `duck_cosine` mirrors."""
+    zero-norm rule and the op order `duck_cosine` mirrors
+    (`_cosine_block` is its NumPy twin over a whole block)."""
     denom = na * nb
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(pair_dot(a, b) / denom)

@@ -1525,7 +1525,7 @@ def dedup_simhash_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COS_EVAL_N = 400  # all-pairs exact cosine affordable on <=400 vectors
 
 
-_COS_EVAL_MAX_DEPTH = 2  # deepest probe tier in MULTIPROBE_MASKS
+_COS_EVAL_MAX_DEPTH = 2  # deepest probe tier: bucket ids up to 2 bits apart
 
 
 def _duck_cosine_eval() -> str:
@@ -1563,15 +1563,14 @@ GROUP BY d.probe_depth
 def dedup_cosine_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH bucket QUALITY report — the third leg of the near-dup
     eval symmetry (MinHash banding: `dedup_lsh_eval_report`; SimHash
-    fingerprints: `dedup_simhash_eval_report`; this grades the
-    16-bucket MULTI-PROBE sign-LSH prefilter `dedup_embedding_cosine`
-    relies on), emitted as the full RECALL-vs-CANDIDATES CURVE: one
-    row per probe depth (0 = exact bucket only, 1 = + the 4 flip-1
-    neighbors, 2 = + the 6 flip-2 neighbors — the production tier).
-    On a bounded sample where all-pairs exact cosine is affordable, a
-    pair is a depth-d candidate iff the Hamming distance between its
-    bucket ids is <= d — EXACTLY the pairs the mask-probing join
-    emits, so the curve grades the production operator, not a proxy.
+    fingerprints: `dedup_simhash_eval_report`; this grades a
+    16-bucket MULTI-PROBE sign-LSH prefilter), emitted as the full
+    RECALL-vs-CANDIDATES CURVE: one row per probe depth (0 = exact
+    bucket only, 1 = + the 4 flip-1 neighbors, 2 = + the 6 flip-2
+    neighbors). On a bounded sample where all-pairs exact cosine is
+    affordable, a pair is a depth-d candidate iff the Hamming distance
+    between its bucket ids is <= d — exactly the pairs a join probing
+    every bucket within d flipped bits would emit.
     Measured at sf0.01: recall 0.125 / 0.60 / >=0.8 for ~0.06 / 0.31
     / 0.69 of all pairs as candidates — the honest statement that a
     4-plane sketch at cosine>=0.4 buys high recall only at a large

@@ -25,28 +25,37 @@ vectorstore search at :158, :401) — not a precomputed fixture vector.
 Differences, declared:
   * batch (a DataFrame of queries), not request/response;
   * the eager per-request `len(results) < k` stage gates become
-    per-query whole-partition aggregates over ONE persisted scored
-    relation — one lazy plan, no driver actions;
+    per-query whole-partition aggregates over ONE persisted candidate
+    relation — one plan, whose only driver action is collecting the
+    probe batch;
   * exact search (recall 1.0), so the reference's k*3 over-fetch
     (main.py:158-165) is a no-op here;
   * the LLM scorer is replaced by the deterministic 0.7/0.3 fusion
     with the compute_ner_similarity overlap (main.py:225-234,298-323);
     LLM impls stay behind the extractor interface, off the oracle path.
 
-Scale shape: ONE slim cross join (docs × broadcast probe batch)
-computes score + boolean predicate flags, drops the text column, and
-is persisted; the whole ①②③⑤ cascade then runs in a SINGLE window
-pass over that relation — stage ranks are conditional cumulative sums
-sharing one (query_id → score, doc_id) sort, and every deficit gate
-is a whole-partition aggregate in the same pass (each (query, doc)
-appears exactly once, so COUNT(DISTINCT) over unions of stage sets
-reduces to sums of OR-ed flags). Stage ④ ranks per (query, synonym)
-in a second small window; merge + fusion touch only the selected ~K
-rows per query. Doc vectors come from the PERSISTED vector store
+Scale shape: the probe batch (~100 rows) is embedded and collected
+once, at construction, and rides in the closure of ONE map-only
+`mapInArrow` pass over the persisted vector store
 (sources/vecstore.py — built once per corpus by the map-only
 Arrow-batched embed, then served as a parquet scan), mirroring the
 reference's build-once Chroma persist dir (build_vectorstore.py:
-233-250) opened per process (load_vectorstore, main.py:51-61).
+233-250) opened per process (load_vectorstore, main.py:51-61). Each
+Arrow block of docs is scored against every probe and its
+region/job/synonym flags computed in the same pass; the block then
+emits only the cells some stage can still select — its local top-k
+per (probe, stage predicate), the REPOSE-style per-partition top-k
+before the global merge. No probe x corpus relation is ever built,
+shuffled or sorted: the persisted candidates are ~K rows per probe
+per block. Over them the whole ①②③⑤ cascade runs in a SINGLE window
+pass — stage ranks are conditional cumulative sums sharing one
+(query_id → score, doc_id) sort, and every deficit gate is a
+whole-partition aggregate in the same pass (each (query, doc) appears
+at most once, so COUNT(DISTINCT) over unions of stage sets reduces to
+sums of OR-ed flags). Stage ④ ranks per (query, synonym) in a second
+small window; merge + fusion touch only the selected ~K rows per
+query. `_lattice_keep` states why the pruning leaves every rank and
+gate count unchanged.
 
 The query batch is chosen so every stage is exercised at the driver's
 sf0.01: q0/q2/q3 fill at ①, q1 relaxes to ② (10 docs), q5's rare
@@ -63,8 +72,10 @@ faithful implementation of it never corrupts the merge.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from vector_search_ner_spark.embedder import HashingEmbedder
@@ -271,45 +282,139 @@ FROM (
 """
 
 
-def _scored_relation(spark: SparkSession, sf_dir: str, probes: DataFrame) -> DataFrame:
-    """The shared front half of both lattice formulations: embed the
-    probe batch (query-TIME embedding, ~40 rows), open the persisted
-    doc vector store, and compute ONE slim scored relation — score +
-    boolean predicate flags per (probe, doc), text dropped before the
-    persist (norms hoisted per side, zero-norm guarded; the fold runs
-    over the pre-cast double arrays — bit-identical, fewer interpreted
-    nodes per pair)."""
-    emb = HashingEmbedder()
-    probes = (
-        probes.withColumn("pvec", emb.embed_col(F.col("ptext")))
-        .withColumn("pvec_d", to_double_array(F.col("pvec")))
-        .withColumn("__pnorm", l2_norm(F.col("pvec")))
+def _lattice_keep(score, hr, hj, hs, qr, qj, main_of, by_doc):
+    """Which (doc, probe) cells of one block of docs the lattice can
+    still select. `score`/`hr`/`hj`/`hs` are (docs, probes) matrices,
+    `qr`/`qj` per-probe field presence, `main_of[p]` the column of
+    probe p's main probe (p itself for a main probe, -1 if its query
+    has none), and `by_doc` the block's rows in ascending doc_id order.
+
+    Each column is ranked in the lattice windows' own order (score
+    desc, doc_id asc), and a stage's block-local top-k is its
+    `csum(pred) <= k` over that order. Kept: each main probe's top
+    STAGE_K of the ① ② ③r ③j predicates and its first FALLBACK_K rows;
+    each synonym probe's top STAGE_K of the ④ predicate; and the main
+    row of every doc in one of its query's ④ tops, which the ⑤ gate
+    counts through `in4`. Exact for any split of the corpus into
+    blocks: a row in a stage's global top-k is in its own block's
+    top-k, and so is every row ranked above it, so every
+    cumulative-sum rank, gate count and row_number the lattice reads
+    keeps its value."""
+    order = by_doc[np.argsort(-score[by_doc], axis=0, kind="stable")]
+    r, j, s = (np.take_along_axis(m, order, axis=0) for m in (hr, hj, hs))
+
+    def top(pred, k):
+        return pred & (np.cumsum(pred, axis=0) <= k)
+
+    main = main_of == np.arange(len(main_of))
+    ranked = np.where(
+        main,
+        top((r | ~qr) & (j | ~qj), STAGE_K)
+        | top(r | j, STAGE_K)
+        | top(r & qr, STAGE_K)
+        | top(j & qj, STAGE_K)
+        | (np.arange(len(order)) < FALLBACK_K)[:, None],
+        top((r | ~qr) & s, STAGE_K),
     )
-    # docs side: the persisted vector store (built once per corpus
-    # fingerprint, then a plain parquet scan — the reference never
-    # re-embeds a document at query time, and neither do we)
-    docs = doc_vector_store(spark, sf_dir)
-    # probe-dot in the Arrow pair kernel: this crossJoin is corpus x
-    # probe-batch sized (the one data-sized stage of the lattice)
-    score = vk.cosine_from_norms(
-        F.col("pvec_d"), F.col("dvec_d"), F.col("__pnorm"), F.col("__dnorm")
-    )
-    return (
-        docs.crossJoin(F.broadcast(probes))
+    keep = np.zeros_like(ranked)
+    np.put_along_axis(keep, order, ranked, axis=0)
+    for c in np.flatnonzero(~main & (main_of >= 0)):
+        keep[:, main_of[c]] |= keep[:, c]
+    return keep
+
+
+def _lattice_candidates(spark: SparkSession, sf_dir: str, probes: DataFrame) -> DataFrame:
+    """The lattice's candidate relation: score + predicate flags per
+    kept (probe, doc), from ONE map-only Arrow pass over the persisted
+    doc vector store, persisted for the window pass.
+
+    The probe batch is embedded (query-TIME embedding) and collected
+    here, at construction — one eager job of ~100 rows — and its
+    vectors, norms and terms ride in the kernel's closure. Each Arrow
+    block of docs widens `dvec` to float64 (exact), scores every
+    (doc, probe) pair with `veckernel._cosine_block` (bit-identical
+    to `cosine_from_norms`), computes each distinct region/job/synonym
+    term's `contains` once per doc (NULL reads as False), and emits
+    only the cells `_lattice_keep` says a stage can still select."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    pvec = HashingEmbedder().embed_col(F.col("ptext"))
+    rows = (
+        probes.withColumn("pvec", pvec)
         .select(
             "query_id",
             "syn_idx",
-            "doc_id",
-            "lang",
-            score.alias("score"),
-            F.coalesce(F.col("text").contains(F.col("region")), F.lit(False)).alias("hr"),
-            F.coalesce(F.col("text").contains(F.col("job")), F.lit(False)).alias("hj"),
-            F.coalesce(F.col("text").contains(F.col("synonym")), F.lit(False)).alias("hs"),
-            F.col("region").isNotNull().alias("qr"),
-            F.col("job").isNotNull().alias("qj"),
+            "region",
+            "job",
+            "synonym",
+            to_double_array(F.col("pvec")).alias("pvec_d"),
+            l2_norm(F.col("pvec")).alias("pnorm"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .collect()
     )
+    qid = np.array([r.query_id for r in rows], dtype=np.int64)
+    sidx = np.array([r.syn_idx for r in rows], dtype=np.int64)
+    region, job, synonym = ([r[c] for r in rows] for c in ("region", "job", "synonym"))
+    Q = np.array([r.pvec_d for r in rows], dtype=np.float64)
+    pnorm = np.array([r.pnorm for r in rows], dtype=np.float64)
+    qr = np.array([t is not None for t in region])
+    qj = np.array([t is not None for t in job])
+    main_at = {q: p for p, (q, i) in enumerate(zip(qid, sidx)) if i == -1}
+    main_of = np.array(
+        [p if i == -1 else main_at.get(q, -1) for p, (q, i) in enumerate(zip(qid, sidx))],
+        dtype=np.int64,
+    )
+    terms = {t for t in region + job + synonym if t is not None}
+
+    docs = doc_vector_store(spark, sf_dir).select("doc_id", "text", "lang", "dvec", "__dnorm")
+    out = StructType(
+        [probes.schema["query_id"], probes.schema["syn_idx"], docs.schema["doc_id"], docs.schema["lang"]]
+        + [StructField("score", DoubleType())]
+        + [StructField(c, BooleanType()) for c in ("hr", "hj", "hs", "qr", "qj")]
+    )
+    qid_t, sidx_t = (to_arrow_type(f.dataType) for f in out.fields[:2])
+
+    def fn(batches):
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0 or not len(qid):
+                continue
+            X = vk._list_to_matrix(rb.column("dvec"), "dvec")
+            dnorm = rb.column("__dnorm").to_numpy(zero_copy_only=False)
+            score = vk._cosine_block(X, Q, dnorm, pnorm)
+            text = rb.column("text")
+            has = {
+                t: pc.fill_null(pc.match_substring(text, t), False).to_numpy(zero_copy_only=False)
+                for t in terms
+            }
+            absent = np.zeros(n, dtype=bool)
+
+            def flags(ts):
+                return np.stack([absent if t is None else has[t] for t in ts], axis=1)
+
+            hr, hj, hs = flags(region), flags(job), flags(synonym)
+            by_doc = pc.sort_indices(rb.column("doc_id"), null_placement="at_start").to_numpy()
+            i, p = np.nonzero(_lattice_keep(score, hr, hj, hs, qr, qj, main_of, by_doc))
+            kept = rb.select(["doc_id", "lang"]).take(pa.array(i))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qid[p], qid_t),
+                    pa.array(sidx[p], sidx_t),
+                    kept.column(0),
+                    kept.column(1),
+                    pa.array(score[i, p]),
+                    pa.array(hr[i, p]),
+                    pa.array(hj[i, p]),
+                    pa.array(hs[i, p]),
+                    pa.array(qr[p]),
+                    pa.array(qj[p]),
+                ],
+                names=out.names,
+            )
+
+    return docs.mapInArrow(fn, out).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def v2_lattice(spark: SparkSession, sf_dir: str, probes: DataFrame) -> DataFrame:
@@ -321,18 +426,22 @@ def v2_lattice(spark: SparkSession, sf_dir: str, probes: DataFrame) -> DataFrame
     presence (NULL region/job) gates the stages per query — nothing
     about the batch is hard-coded.
 
-    Execution: every main stage's per-query top-k shares ONE
+    Execution: the probe batch is collected here (one eager job) and
+    `_lattice_candidates` scores it against the store in one pruned
+    Arrow pass, keeping only the (probe, doc) cells a stage can still
+    select. Over those, every main stage's per-query top-k shares ONE
     (query_id → score desc, doc_id) sort, so stage ranks are
     conditional cumulative sums and deficit gates are whole-partition
     aggregates computed in the SAME pass — one shuffle for the entire
     ①②③⑤ cascade instead of a window + a count semi-join per stage
-    (each (query, doc) appears exactly once in the main scored
-    relation, so COUNT(DISTINCT doc) over a union of stage sets is a
+    (each (query, doc) appears at most once among the main
+    candidates, so COUNT(DISTINCT doc) over a union of stage sets is a
     sum of OR-ed membership flags). Stage ④ ranks per (query, synonym)
     on its own vectors in a second small window; the first-wins merge
     and final fusion rank run over the ~K selected rows per query
-    only."""
-    scored_all = _scored_relation(spark, sf_dir, probes)
+    only. The persisted candidates stay cached until the caller
+    clears the cache."""
+    scored_all = _lattice_candidates(spark, sf_dir, probes)
     main = scored_all.where(F.col("syn_idx") == -1).drop("syn_idx", "hs")
     syn_rows = scored_all.where(F.col("syn_idx") >= 0)
 
@@ -417,11 +526,10 @@ def v2_lattice(spark: SparkSession, sf_dir: str, probes: DataFrame) -> DataFrame
     return rank_topn(fused, FINAL_N).select("query_id", "doc_id", "combined_score", "rank")
 
 
-@query("staged_retrieval_pipeline", oracle=_duck_staged_oracle())
-def staged_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship v2 lattice over the static QUERIES batch — one
-    main probe per query plus one probe per (query, synonym) pair,
-    each carrying ITS OWN query text to embed (see v2_lattice)."""
+def _static_probes(spark: SparkSession) -> DataFrame:
+    """The static QUERIES batch as v2_lattice probes: one main probe
+    per query plus one probe per (query, synonym) pair, each carrying
+    ITS OWN query text to embed."""
     rows = []
     for qid, region, job in QUERIES:
         rows.append(
@@ -433,10 +541,15 @@ def staged_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append(
                     (qid, idx, region, job, syn, " ".join(t for t in (region, syn) if t))
                 )
-    probes = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "query_id int, syn_idx int, region string, job string, synonym string, ptext string"
     )
-    return v2_lattice(spark, sf_dir, probes)
+
+
+@query("staged_retrieval_pipeline", oracle=_duck_staged_oracle())
+def staged_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship v2 lattice over the static QUERIES batch."""
+    return v2_lattice(spark, sf_dir, _static_probes(spark))
 
 
 @query(
@@ -990,8 +1103,9 @@ def chat_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query AND per-synonym query-text embedding, 0.7/0.3 fusion,
     top-5 (multi_stage_search + llm_rerank, main.py:329-411,452-469).
     The probe batch — including which stages each query may take — is
-    DERIVED from the messages inside the plan; nothing is
-    pre-extracted driver-side."""
+    DERIVED from the messages by Spark and collected once, when the
+    lattice is built (see v2_lattice); the corpus side never leaves
+    the executors."""
     req = spark.createDataFrame(
         CHAT_E2E_MSGS,
         "msg_id int, user_message string, profile_region string, profile_job string",
@@ -1024,153 +1138,9 @@ def chat_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v2_lattice(spark, sf_dir, main.unionByName(synp))
 
 
-def v2_lattice_topk(spark: SparkSession, sf_dir: str, probes: DataFrame) -> DataFrame:
-    """The SAME v2 relaxation lattice as `v2_lattice`, in the
-    per-stage TOP-K formulation — the shape that survives 100 TB.
-
-    The single-pass formulation sorts the ENTIRE (query × corpus)
-    scored relation once per query partition to drive its cumulative-
-    sum stage ranks: elegant, one shuffle, but that is a global sort
-    of the corpus per query batch — the thing you cannot do at 100 TB.
-    Here every stage is `filter(stage predicate) → row_number ≤ K`,
-    which Spark plans as WindowGroupLimit: a per-partition top-K heap
-    runs BEFORE the exchange, so each stage shuffles only ~K rows per
-    partition per query — never the corpus. Deficit gates become
-    broadcast joins of per-query COUNT(DISTINCT doc) frames over the
-    already-K-sized stage outputs (tiny). Results are IDENTICAL to
-    `v2_lattice` (same oracle, asserted equal in tests): stage
-    member sets, gate decisions, first-wins merge, and fusion ranks
-    all coincide.
-
-    Local trade, declared: six small windows + gate joins cost more
-    fixed overhead than one shared sort at fixture scale, so the
-    single-pass variant stays the local flagship; this one is the
-    plan you deploy when the store is a table, not a broadcast. The
-    persisted scored relation is itself the local-scale convenience —
-    at 100 TB you drop the persist and let each stage's column-pruned
-    store scan feed its own WindowGroupLimit."""
-    scored_all = _scored_relation(spark, sf_dir, probes)
-    main = scored_all.where(F.col("syn_idx") == -1).drop("syn_idx", "hs")
-    syn_rows = scored_all.where(F.col("syn_idx") >= 0)
-
-    in_r = F.col("qr")
-    in_j = F.col("qj")
-    in_both = F.col("qr") & F.col("qj")
-    cols = ["query_id", "doc_id", "lang", "score", "hr", "hj", "stage"]
-    qmain = probes.where(F.col("syn_idx") == -1).select(
-        "query_id",
-        F.col("region").isNotNull().alias("qr"),
-        F.col("job").isNotNull().alias("qj"),
-    )
-
-    def topk(df, pred, k, extra_part=()):
-        w = Window.partitionBy("query_id", *extra_part).orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        return (
-            df.where(pred)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .drop("rn")
-        )
-
-    p1 = (F.col("hr") | ~in_r) & (F.col("hj") | ~in_j)
-    p2 = F.col("hr") | F.col("hj")
-    p3r = F.col("hr") & in_r
-    p3j = F.col("hj") & in_j
-
-    # persist every stage frame: the gate chain (g2→s2→u12→g3→s3→
-    # sel_all→g5→s5→merged) references earlier stages from MANY
-    # subtrees — without a cache boundary s1's window re-evaluates
-    # ~15-20x through the expanded DAG (measured 7.3s vs 3.4s at
-    # sf0.1). The frames are K-rows-per-query tiny, so this is the
-    # right call at 100 TB too: you always materialize stage outputs,
-    # never re-derive them per gate.
-    # DELIBERATELY persist, not localCheckpoint: (a) each frame is at
-    # most STAGE_K rows per query — the cached total is KBs, so the
-    # session-lifetime pin is negligible (and the 1 GB-driver probe
-    # passes with them resident); (b) persist retains the logical
-    # subtree, keeping every stage's WindowGroupLimit visible to plan
-    # audits (test_topk_lattice_plans_window_group_limits) — a
-    # checkpoint would erase that evidence behind an ExistingRDD; (c)
-    # the lattice is a FIXED 5-stage composition, so the repeated
-    # logical subtrees stay bounded (plan renders fine under the 1 GB
-    # probe) — unlike the unbounded unrolled MMR loop that required
-    # per-step checkpoints.
-    s1 = topk(main, p1, STAGE_K).withColumn("stage", F.lit(0)).select(*cols).persist()
-    s4 = (
-        topk(syn_rows.where((F.col("hr") | ~in_r) & F.col("hs")), F.lit(True),
-             STAGE_K, extra_part=("syn_idx",))
-        .withColumn("stage", F.lit(10) + F.col("syn_idx"))
-        .select(*cols)
-        .persist()
-    )
-
-    def gate(selected, limit, extra_pred=None):
-        # queries whose selected-so-far DISTINCT doc count is below
-        # `limit` — counts run over K-sized frames, then broadcast
-        counts = selected.groupBy("query_id").agg(
-            F.count_distinct("doc_id").alias("n")
-        )
-        g = qmain.join(counts, "query_id", "left").where(
-            F.coalesce(F.col("n"), F.lit(0)) < limit
-        )
-        if extra_pred is not None:
-            g = g.where(extra_pred)
-        return F.broadcast(g.select("query_id"))
-
-    g2 = gate(s1.select("query_id", "doc_id"), DEFICIT_MIN, in_both)
-    s2 = topk(main, p2, STAGE_K).join(g2, "query_id").withColumn(
-        "stage", F.lit(1)
-    ).select(*cols).persist()
-
-    u12 = s1.select("query_id", "doc_id").unionByName(s2.select("query_id", "doc_id"))
-    g3 = gate(u12, DEFICIT_MIN)
-    s3r = topk(main, p3r, STAGE_K).join(g3, "query_id").withColumn(
-        "stage", F.lit(2)
-    ).select(*cols).persist()
-    s3j = topk(main, p3j, STAGE_K).join(g3, "query_id").withColumn(
-        "stage", F.lit(3)
-    ).select(*cols).persist()
-
-    sel_all = u12
-    for f in (s3r, s3j, s4):
-        sel_all = sel_all.unionByName(f.select("query_id", "doc_id"))
-    g5 = gate(sel_all, FALLBACK_K)
-    s5 = topk(main, F.lit(True), FALLBACK_K).join(g5, "query_id").withColumn(
-        "stage", F.lit(100)
-    ).select(*cols)
-
-    merged = s1
-    for f in (s2, s3r, s3j, s4, s5):
-        merged = merged.unionByName(f)
-    w_m = Window.partitionBy("query_id", "doc_id").orderBy(F.col("stage").asc())
-    winner = merged.withColumn("mrn", F.row_number().over(w_m)).where(F.col("mrn") == 1)
-    meta = overlap_score(F.col("hr"), F.col("hj"), F.col("lang") == "en")
-    fused = winner.select(
-        "query_id", "doc_id", fuse_scores(F.col("score"), meta).alias("combined_score")
-    )
-    return rank_topn(fused, FINAL_N).select("query_id", "doc_id", "combined_score", "rank")
-
-
 @query("staged_retrieval_topk_scale", oracle=_duck_staged_oracle())
 def staged_retrieval_topk_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`staged_retrieval_pipeline` in the per-stage WindowGroupLimit
-    formulation (see v2_lattice_topk) over the SAME static query
-    batch — identical results, identical oracle; registered so the
-    scale-shape plan is continuously exercised and compared."""
-    rows = []
-    for qid, region, job in QUERIES:
-        rows.append(
-            (qid, -1, region, job, None, " ".join(t for t in (region, job) if t))
-        )
-    for job_term, syn, idx in SYNONYMS:
-        for qid, region, job in QUERIES:
-            if job == job_term:
-                rows.append(
-                    (qid, idx, region, job, syn, " ".join(t for t in (region, syn) if t))
-                )
-    probes = spark.createDataFrame(
-        rows, "query_id int, syn_idx int, region string, job string, synonym string, ptext string"
-    )
-    return v2_lattice_topk(spark, sf_dir, probes)
+    """`staged_retrieval_pipeline` under its former per-stage top-k
+    name: the pruned candidate pass already keeps only each block's
+    per-stage top-k, so one lattice serves both names."""
+    return staged_retrieval_pipeline(spark, sf_dir)
