@@ -1,8 +1,11 @@
 """The v2 lattice's candidate pass keeps, per Arrow block of docs, only
 the (probe, doc) cells a stage can still select
-(`queries_pipeline._lattice_keep`). These tests pin that the pruning
-is exact: on random lattices split into random blocks, and on the
-oracle-checked pipelines run over 7-row blocks.
+(`queries_pipeline._lattice_keep`), and one grouped pass per query
+(`queries_pipeline._lattice_select`) runs the cascade over them. These
+tests pin that the pruning is exact and that the grouped cascade equals
+an independent model of the lattice: on random lattices split into
+random blocks, and on the oracle-checked pipelines run over 7-row
+blocks.
 """
 
 from __future__ import annotations
@@ -10,6 +13,7 @@ from __future__ import annotations
 from collections import defaultdict
 
 import numpy as np
+import pyarrow as pa
 
 from tests.oracle_harness import check_query
 from vector_search_ner_spark.plans import queries_pipeline as qp
@@ -107,18 +111,52 @@ def _cells(score, hr, hj, hs, docs, mask) -> dict:
     }
 
 
+def _winner_rows(won, cells, qid, sidx) -> dict:
+    """`_lattice`'s winners as the rows the merge emits: {(query, doc):
+    (score, hr, hj)} of the winning stage's probe."""
+    probe = {(q, i): p for p, (q, i) in enumerate(zip(qid, sidx))}
+    out = {}
+    for (q, d), stage in won.items():
+        score, hr, hj, _ = cells[probe[q, stage - 10 if 10 <= stage < 100 else -1], d]
+        out[q, d] = (score, hr, hj)
+    return out
+
+
+def _grouped(cells, qid, sidx, qr, qj, rng) -> dict:
+    """`_lattice_select` run on each query's cells, handed over in a
+    random row order: {(query, doc): (score, hr, hj)}."""
+    by_q = defaultdict(list)
+    for (p, d), (score, hr, hj, hs) in cells.items():
+        flags = (bool(f) for f in (hr, hj, hs, qr[p], qj[p]))
+        by_q[qid[p]].append((int(qid[p]), int(sidx[p]), d, "en", float(score), *flags))
+    names = ["query_id", "syn_idx", "doc_id", "lang", "score", "hr", "hj", "hs", "qr", "qj"]
+    out = {}
+    for rows in by_q.values():
+        rows = [rows[i] for i in rng.permutation(len(rows))]
+        t = pa.table([pa.array(col) for col in zip(*rows)], names=names)
+        res = qp._lattice_select(t)
+        assert res.column_names == qp.WINNER_COLS
+        for q, d, _, score, hr, hj in zip(*(res.column(c).to_pylist() for c in qp.WINNER_COLS)):
+            assert (q, d) not in out
+            out[q, d] = (score, hr, hj)
+    return out
+
+
 def test_pruned_lattice_selects_the_same_stage_sets():
     """Per-block pruning is exact for any split of the corpus: random
     lattices split into 2-8 random blocks select the same stage sets
-    from the kept cells as from every cell."""
+    from the kept cells as from every cell. The grouped per-query
+    cascade emits, from all cells and from the kept cells alike, the
+    winning row of every (query, doc) the model selects."""
     rng = np.random.default_rng(20)
-    differing = n_cells = n_kept = 0
+    shuffle = np.random.default_rng(21)
+    differing = grouped_differing = n_cells = n_kept = 0
     for _ in range(400):
         score, hr, hj, hs, qid, sidx, qr, qj, main_of = _random_lattice(rng)
         n_docs = score.shape[0]
-        full = _lattice(
-            _cells(score, hr, hj, hs, np.arange(n_docs), np.ones(score.shape, bool)), qid, sidx, qr, qj
-        )
+        cells = _cells(score, hr, hj, hs, np.arange(n_docs), np.ones(score.shape, bool))
+        full = _lattice(cells, qid, sidx, qr, qj)
+        want = _winner_rows(full, cells, qid, sidx)
         kept = {}
         block_of = rng.integers(0, int(rng.integers(2, 9)), n_docs)
         for b in np.unique(block_of):
@@ -128,7 +166,10 @@ def test_pruned_lattice_selects_the_same_stage_sets():
             kept.update(_cells(score[docs], hr[docs], hj[docs], hs[docs], docs, keep))
         n_cells, n_kept = n_cells + score.size, n_kept + len(kept)
         differing += _lattice(kept, qid, sidx, qr, qj) != full
+        grouped_differing += _grouped(cells, qid, sidx, qr, qj, shuffle) != want
+        grouped_differing += _grouped(kept, qid, sidx, qr, qj, shuffle) != want
     assert differing == 0, differing
+    assert grouped_differing == 0, grouped_differing
     assert n_kept < n_cells, (n_kept, n_cells)
 
 
@@ -139,10 +180,7 @@ def test_v2_lattice_oracles_hold_over_seven_row_blocks(spark, sf_dir):
     old = spark.conf.get(ARROW_BATCH)
 
     def kept_cells() -> int:
-        kept = qp._lattice_candidates(spark, sf_dir, qp._static_probes(spark))
-        n = kept.count()
-        kept.unpersist()
-        return n
+        return qp._lattice_candidates(spark, sf_dir, qp._static_probes(spark)).count()
 
     n_one_block = kept_cells()
     spark.conf.set(ARROW_BATCH, "7")
@@ -152,3 +190,17 @@ def test_v2_lattice_oracles_hold_over_seven_row_blocks(spark, sf_dir):
             check_query(spark, name, sf_dir)
     finally:
         spark.conf.set(ARROW_BATCH, old)
+
+
+def test_v2_lattice_over_zero_probes_returns_no_rows(spark, sf_dir):
+    """An empty probe batch — none at all, or only empty chat messages,
+    which the guard drops before any probe is built — yields no rows
+    and the lattice's 4-column schema."""
+    batches = (
+        qp._static_probes(spark).limit(0),
+        qp._chat_probes(spark, [(0, "", "slow", "sort"), (1, "", None, None)]),
+    )
+    for probes in batches:
+        df = qp.v2_lattice(spark, sf_dir, probes)
+        assert df.columns == ["query_id", "doc_id", "combined_score", "rank"]
+        assert df.collect() == []

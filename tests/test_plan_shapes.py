@@ -177,12 +177,14 @@ def test_similarity_full_scan_jvm_rank(spark):
 
 
 def test_staged_pipelines_stay_jvm_side(spark):
-    """Both retrieval pipelines must keep ALL lattice logic JVM-side:
-    the only Python in the plan is Arrow-batched — the v1 embedder
-    (ArrowEvalPython) or the v2 candidate pass (MapInArrow) — never
-    row-at-a-time BatchEvalPython; and the slim scored relation must
-    be persisted (InMemoryTableScan / TableCacheQueryStage) so the
-    stage branches share one materialization."""
+    """Both retrieval pipelines must keep their Python Arrow-batched —
+    the v1 embedder (ArrowEvalPython) or the v2 candidate pass
+    (MapInArrow) — never row-at-a-time BatchEvalPython. The v1 scored
+    relation must be persisted (InMemoryTableScan /
+    TableCacheQueryStage) so its stage branches share one
+    materialization. The v2 pipelines read their candidates once and
+    embed the probe batch on the driver, so neither a cache nor an
+    embedding UDF (ArrowEvalPython) appears in their plans."""
     for name, arrow_node in (
         ("staged_retrieval_pipeline", "MapInArrow"),
         ("staged_retrieval_v1_hybrid", "ArrowEvalPython"),
@@ -191,7 +193,10 @@ def test_staged_pipelines_stay_jvm_side(spark):
         p = _plan(spark, name)
         assert "BatchEvalPython" not in p, (name, p)
         assert arrow_node in p, (name, p)
-        assert "InMemoryTableScan" in p or "TableCacheQueryStage" in p, (name, p)
+        if arrow_node == "ArrowEvalPython":
+            assert "InMemoryTableScan" in p or "TableCacheQueryStage" in p, (name, p)
+        else:
+            assert "ArrowEvalPython" not in p, (name, p)
 
 
 def test_runtime_bloom_filter_injected(spark):
@@ -316,17 +321,24 @@ def test_v2_lattice_scores_the_store_in_one_arrow_pass(spark):
     """The v2 lattice scores the corpus in ONE map-only MapInArrow pass
     that reads the vector store scan directly and keeps only each
     block's stage candidates — no probe x corpus join of any kind, so
-    no corpus-sized relation reaches a shuffle or a sort."""
+    no corpus-sized relation reaches a shuffle or a sort. The cascade
+    over the candidates is ONE grouped Arrow pass per query
+    (FlatMapGroupsInArrow), and the only Window left is the final
+    rank's."""
     for name in ("staged_retrieval_pipeline", "chat_pipeline_e2e"):
         p = _plan(spark, name)
         assert "BroadcastNestedLoopJoin" not in p, (name, p)
         assert "CartesianProduct" not in p, (name, p)
+        assert "BroadcastHashJoin" not in p, (name, p)
         arrow_in = re.search(r"\(\d+\) MapInArrow\nInput \[\d+\]: (\[.*\])", p)
         store_out = re.search(
             r"\(\d+\) Scan parquet *\nOutput \[\d+\]: (\[.*\])\n.*\nLocation: [^\n]*/vecstore/", p
         )
         assert arrow_in and store_out, (name, p)
         assert arrow_in.group(1) == store_out.group(1), (name, p)
+        assert len(re.findall(r"^\(\d+\) FlatMapGroupsInArrow$", p, re.M)) == 1, (name, p)
+        windows = re.findall(r"^\(\d+\) Window\nInput \[\d+\]: (\[.*\])$", p, re.M)
+        assert len(windows) == 1 and "combined_score" in windows[0], (name, p)
 
 
 def test_mixture_quota_plans_window_group_limit(spark):

@@ -146,3 +146,29 @@ def test_cosine_block_equals_cosine_from_norms(spark):
         got = float(block[r["d"], r["p"]])
         assert got == r["kernel"] == r["fold"], (r, got)
     assert (block[2] == 0.0).all() and (block[:, 1] == 0.0).all()
+
+
+def test_driver_probe_embed_equals_the_udf_embed(spark):
+    """The lattice embeds its probe batch on the driver
+    (`embed_texts_numpy` widened to float64, normed by `_seq_dot`); that
+    must equal, bit for bit, the HashingEmbedder UDF's vectors cast by
+    `to_double_array` and their `l2_norm` fold, edge texts included."""
+    import numpy as np
+
+    from vector_search_ner_spark.embedder import DEFAULT_DIM, HashingEmbedder, embed_texts_numpy
+
+    texts = ["", "   ", "a\xa0b", "join join join scan join", " ".join(f"tok{i % 37}" for i in range(200))]
+    emb = HashingEmbedder().embed_col(F.col("t"))
+    rows = (
+        spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+        .select("i", V.to_double_array(emb).alias("v"), V.l2_norm(emb).alias("n"))
+        .orderBy("i")
+        .collect()
+    )
+    Q = np.array(embed_texts_numpy(texts), dtype=np.float64).reshape(-1, DEFAULT_DIM)
+    norm = np.sqrt(vk._seq_dot(Q, Q))
+    assert Q.shape == (len(texts), DEFAULT_DIM)
+    for r in rows:
+        assert Q[r["i"]].tolist() == r["v"], r["i"]
+        assert float(norm[r["i"]]) == r["n"], r["i"]
+    assert norm[0] == norm[1] == 0.0 and norm[4] > 0.0

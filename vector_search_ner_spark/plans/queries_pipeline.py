@@ -25,18 +25,18 @@ vectorstore search at :158, :401) — not a precomputed fixture vector.
 Differences, declared:
   * batch (a DataFrame of queries), not request/response;
   * the eager per-request `len(results) < k` stage gates become
-    per-query whole-partition aggregates over ONE persisted candidate
-    relation — one plan, whose only driver action is collecting the
-    probe batch;
+    per-query sums of stage flags in ONE grouped pass over the
+    candidates, nothing persisted — one plan, whose only driver action
+    is collecting the probe batch;
   * exact search (recall 1.0), so the reference's k*3 over-fetch
     (main.py:158-165) is a no-op here;
   * the LLM scorer is replaced by the deterministic 0.7/0.3 fusion
     with the compute_ner_similarity overlap (main.py:225-234,298-323);
     LLM impls stay behind the extractor interface, off the oracle path.
 
-Scale shape: the probe batch (~100 rows) is embedded and collected
-once, at construction, and rides in the closure of ONE map-only
-`mapInArrow` pass over the persisted vector store
+Scale shape: the probe batch (~100 rows) is collected and embedded
+on the driver once, at construction, and rides in the closure of ONE
+map-only `mapInArrow` pass over the persisted vector store
 (sources/vecstore.py — built once per corpus by the map-only
 Arrow-batched embed, then served as a parquet scan), mirroring the
 reference's build-once Chroma persist dir (build_vectorstore.py:
@@ -46,16 +46,18 @@ region/job/synonym flags computed in the same pass; the block then
 emits only the cells some stage can still select — its local top-k
 per (probe, stage predicate), the REPOSE-style per-partition top-k
 before the global merge. No probe x corpus relation is ever built,
-shuffled or sorted: the persisted candidates are ~K rows per probe
-per block. Over them the whole ①②③⑤ cascade runs in a SINGLE window
-pass — stage ranks are conditional cumulative sums sharing one
-(query_id → score, doc_id) sort, and every deficit gate is a
-whole-partition aggregate in the same pass (each (query, doc) appears
-at most once, so COUNT(DISTINCT) over unions of stage sets reduces to
-sums of OR-ed flags). Stage ④ ranks per (query, synonym) in a second
-small window; merge + fusion touch only the selected ~K rows per
-query. `_lattice_keep` states why the pruning leaves every rank and
-gate count unchanged.
+shuffled or sorted: the candidates are ~K rows per probe per block.
+The global merge is ONE grouped Arrow pass per query
+(`_lattice_select`): every stage window and gate partitions by
+query_id, so one sort of a query's candidates (score desc, doc_id)
+serves them all — stage ranks are conditional cumulative sums, every
+deficit gate a sum of stage flags (each (query, doc) has at most one
+main row, so COUNT(DISTINCT) over unions of stage sets reduces to sums
+of OR-ed flags), stage ④ ranks each synonym probe's rows on its own
+vector, and the first-wins merge keeps each doc's lowest stage. Only
+fusion and the final rank, over the ~K selected rows per query, run
+as JVM expressions and a window. `_lattice_keep` states why the
+pruning leaves every rank and gate count unchanged.
 
 The query batch is chosen so every stage is exercised at the driver's
 sf0.01: q0/q2/q3 fill at ①, q1 relaxes to ② (10 docs), q5's rare
@@ -73,12 +75,14 @@ faithful implementation of it never corrupts the merge.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
-from vector_search_ner_spark.embedder import HashingEmbedder
+from vector_search_ner_spark.embedder import DEFAULT_DIM, HashingEmbedder, embed_texts_numpy
 from vector_search_ner_spark.operators import veckernel as vk
 from vector_search_ner_spark.functions.vector import (
     duck_cosine,
@@ -289,8 +293,8 @@ def _lattice_keep(score, hr, hj, hs, qr, qj, main_of, by_doc):
     probe p's main probe (p itself for a main probe, -1 if its query
     has none), and `by_doc` the block's rows in ascending doc_id order.
 
-    Each column is ranked in the lattice windows' own order (score
-    desc, doc_id asc), and a stage's block-local top-k is its
+    Each column is ranked in the lattice's own order (score desc,
+    doc_id asc), and a stage's block-local top-k is its
     `csum(pred) <= k` over that order. Kept: each main probe's top
     STAGE_K of the ① ② ③r ③j predicates and its first FALLBACK_K rows;
     each synonym probe's top STAGE_K of the ④ predicate; and the main
@@ -326,39 +330,28 @@ def _lattice_keep(score, hr, hj, hs, qr, qj, main_of, by_doc):
 def _lattice_candidates(spark: SparkSession, sf_dir: str, probes: DataFrame) -> DataFrame:
     """The lattice's candidate relation: score + predicate flags per
     kept (probe, doc), from ONE map-only Arrow pass over the persisted
-    doc vector store, persisted for the window pass.
+    doc vector store.
 
-    The probe batch is embedded (query-TIME embedding) and collected
-    here, at construction — one eager job of ~100 rows — and its
-    vectors, norms and terms ride in the kernel's closure. Each Arrow
-    block of docs widens `dvec` to float64 (exact), scores every
-    (doc, probe) pair with `veckernel._cosine_block` (bit-identical
-    to `cosine_from_norms`), computes each distinct region/job/synonym
-    term's `contains` once per doc (NULL reads as False), and emits
-    only the cells `_lattice_keep` says a stage can still select."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    The probe batch (~100 rows) is collected here, at construction —
+    one eager job, no Python in it — and embedded on the driver by
+    `embed_texts_numpy`, the function the HashingEmbedder UDF runs
+    (query-TIME embedding); its float32 vectors are widened to float64
+    and normed by `veckernel._seq_dot`, the `l2_norm` fold's order, so
+    both are bit-identical to the JVM-side embed. Vectors, norms and
+    terms ride in the kernel's closure. Each Arrow block of docs widens
+    `dvec` to float64 (exact), scores every (doc, probe) pair with
+    `veckernel._cosine_block` (bit-identical to `cosine_from_norms`),
+    computes each distinct region/job/synonym term's `contains` once
+    per doc (NULL reads as False), and emits only the cells
+    `_lattice_keep` says a stage can still select."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    pvec = HashingEmbedder().embed_col(F.col("ptext"))
-    rows = (
-        probes.withColumn("pvec", pvec)
-        .select(
-            "query_id",
-            "syn_idx",
-            "region",
-            "job",
-            "synonym",
-            to_double_array(F.col("pvec")).alias("pvec_d"),
-            l2_norm(F.col("pvec")).alias("pnorm"),
-        )
-        .collect()
-    )
+    rows = probes.select("query_id", "syn_idx", "region", "job", "synonym", "ptext").collect()
     qid = np.array([r.query_id for r in rows], dtype=np.int64)
     sidx = np.array([r.syn_idx for r in rows], dtype=np.int64)
     region, job, synonym = ([r[c] for r in rows] for c in ("region", "job", "synonym"))
-    Q = np.array([r.pvec_d for r in rows], dtype=np.float64)
-    pnorm = np.array([r.pnorm for r in rows], dtype=np.float64)
+    Q = np.array(embed_texts_numpy([r.ptext for r in rows]), dtype=np.float64).reshape(-1, DEFAULT_DIM)
+    pnorm = np.sqrt(vk._seq_dot(Q, Q))
     qr = np.array([t is not None for t in region])
     qj = np.array([t is not None for t in job])
     main_at = {q: p for p, (q, i) in enumerate(zip(qid, sidx)) if i == -1}
@@ -414,11 +407,53 @@ def _lattice_candidates(spark: SparkSession, sf_dir: str, probes: DataFrame) -> 
                 names=out.names,
             )
 
-    return docs.mapInArrow(fn, out).persist(StorageLevel.MEMORY_AND_DISK)
+    return docs.mapInArrow(fn, out)
+
+
+WINNER_COLS = ["query_id", "doc_id", "lang", "score", "hr", "hj"]
+
+
+def _lattice_select(t: pa.Table) -> pa.Table:
+    """The whole cascade for ONE query's candidates `t` (all its probes'
+    kept cells): the rows that win the first-wins merge, as WINNER_COLS.
+
+    The rows are sorted once in the lattice's rank order (score desc,
+    doc_id asc — the oracle's row_number order); every stage's top-k is then `csum(pred) <= k` along it
+    and every deficit gate a sum of flags. Stage ④ is each synonym
+    probe's top STAGE_K of `(hr | ~qr) & hs`; ①②③⑤ rank the main
+    probe's rows, and the ⑤ gate counts the docs of ①-③ and ④ (each
+    (query, doc) has at most one main row, so COUNT(DISTINCT doc) over
+    the union is a sum of OR-ed flags). Each doc keeps the row of its
+    lowest stage."""
+    order = [("score", "descending"), ("doc_id", "ascending")]
+    t = t.take(pc.sort_indices(t, order, null_placement="at_start"))
+    sidx, hr, hj, hs, qr, qj = (t.column(c).to_numpy() for c in ("syn_idx", "hr", "hj", "hs", "qr", "qj"))
+    doc_id = t.column("doc_id").combine_chunks()
+    doc = pc.dictionary_encode(doc_id, null_encoding="encode").indices.to_numpy()
+
+    def top(pred, k):
+        return pred & (np.cumsum(pred) <= k)
+
+    stage = np.full(len(sidx), -1)
+    for i in np.unique(sidx[sidx >= 0]):
+        stage[top((sidx == i) & (hr | ~qr) & hs, STAGE_K)] = 10 + i
+    m = sidx == -1
+    in4 = m & np.isin(doc, doc[stage >= 0])
+    in1 = top(m & (hr | ~qr) & (hj | ~qj), STAGE_K)
+    in2 = (in1.sum() < DEFICIT_MIN) & qr & qj & top(m & (hr | hj), STAGE_K)
+    in3 = (in1 | in2).sum() < DEFICIT_MIN
+    in3r = in3 & top(m & hr & qr, STAGE_K)
+    in3j = in3 & top(m & hj & qj, STAGE_K)
+    in5 = ((in1 | in2 | in3r | in3j | in4).sum() < FALLBACK_K) & top(m, FALLBACK_K)
+    stage = np.where(m, np.select([in1, in2, in3r, in3j, in5], [0, 1, 2, 3, 100], -1), stage)
+
+    sel = np.flatnonzero(stage >= 0)
+    sel = sel[np.argsort(stage[sel], kind="stable")]
+    return t.take(sel[np.unique(doc[sel], return_index=True)[1]]).select(WINNER_COLS)
 
 
 def v2_lattice(spark: SparkSession, sf_dir: str, probes: DataFrame) -> DataFrame:
-    """The reusable single-window-pass v2 lattice over ANY probe batch.
+    """The reusable v2 lattice over ANY probe batch.
 
     `probes` columns: query_id int, syn_idx int (-1 = the main probe,
     >= 0 = a synonym probe), region string?, job string?, synonym
@@ -426,97 +461,19 @@ def v2_lattice(spark: SparkSession, sf_dir: str, probes: DataFrame) -> DataFrame
     presence (NULL region/job) gates the stages per query — nothing
     about the batch is hard-coded.
 
-    Execution: the probe batch is collected here (one eager job) and
-    `_lattice_candidates` scores it against the store in one pruned
-    Arrow pass, keeping only the (probe, doc) cells a stage can still
-    select. Over those, every main stage's per-query top-k shares ONE
-    (query_id → score desc, doc_id) sort, so stage ranks are
-    conditional cumulative sums and deficit gates are whole-partition
-    aggregates computed in the SAME pass — one shuffle for the entire
-    ①②③⑤ cascade instead of a window + a count semi-join per stage
-    (each (query, doc) appears at most once among the main
-    candidates, so COUNT(DISTINCT doc) over a union of stage sets is a
-    sum of OR-ed membership flags). Stage ④ ranks per (query, synonym)
-    on its own vectors in a second small window; the first-wins merge
-    and final fusion rank run over the ~K selected rows per query
-    only. The persisted candidates stay cached until the caller
-    clears the cache."""
-    scored_all = _lattice_candidates(spark, sf_dir, probes)
-    main = scored_all.where(F.col("syn_idx") == -1).drop("syn_idx", "hs")
-    syn_rows = scored_all.where(F.col("syn_idx") >= 0)
-
-    # field-presence gates come from the probe rows themselves — the
-    # lattice works for ANY query batch, nothing is hard-coded
-    in_r = F.col("qr")
-    in_j = F.col("qj")
-    in_both = F.col("qr") & F.col("qj")
-    cols = ["query_id", "doc_id", "lang", "score", "hr", "hj", "stage"]
-
-    # ---- stage ④ first (its doc set feeds the ⑤ gate): per-(query,
-    # synonym) top-k on the synonym probe's own vector
-    w4 = Window.partitionBy("query_id", "syn_idx").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    s4 = (
-        syn_rows.where((F.col("hr") | ~in_r) & F.col("hs"))
-        .withColumn("rn", F.row_number().over(w4))
-        .where(F.col("rn") <= STAGE_K)
-        .withColumn("stage", F.lit(10) + F.col("syn_idx"))
-        .select(*cols)
-    )
-    s4_docs = s4.select("query_id", "doc_id").distinct().withColumn("in4", F.lit(True))
-
-    # ---- the ①②③⑤ cascade in one window pass over `main`
-    w_ord = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_q = Window.partitionBy("query_id")
-
-    def csum(cond):
-        return F.sum(cond.cast("int")).over(w_cum)
-
-    def qsum(cond):
-        return F.sum(cond.cast("int")).over(w_q)
-
-    p1 = (F.col("hr") | ~in_r) & (F.col("hj") | ~in_j)
-    p2 = F.col("hr") | F.col("hj")
-    p3r = F.col("hr") & in_r
-    p3j = F.col("hj") & in_j
-    x = main.join(F.broadcast(s4_docs), ["query_id", "doc_id"], "left").select(
-        *[c for c in main.columns],
-        F.coalesce(F.col("in4"), F.lit(False)).alias("in4"),
-        (p1 & (csum(p1) <= STAGE_K)).alias("in1"),
-        (p2 & (csum(p2) <= STAGE_K)).alias("r2ok"),
-        (p3r & (csum(p3r) <= STAGE_K)).alias("r3rok"),
-        (p3j & (csum(p3j) <= STAGE_K)).alias("r3jok"),
-        (F.row_number().over(w_ord) <= FALLBACK_K).alias("r5ok"),
-    )
-    x = x.withColumn("in2", (qsum(F.col("in1")) < DEFICIT_MIN) & in_both & F.col("r2ok"))
-    x = x.withColumn(
-        "in3", qsum(F.col("in1") | F.col("in2")) < DEFICIT_MIN
-    ).withColumn("in3r", F.col("in3") & F.col("r3rok")).withColumn(
-        "in3j", F.col("in3") & F.col("r3jok")
-    )
-    sel13 = F.col("in1") | F.col("in2") | F.col("in3r") | F.col("in3j")
-    x = x.withColumn(
-        "in5", (qsum(sel13 | F.col("in4")) < FALLBACK_K) & F.col("r5ok")
-    )
-    main_stage = (
-        F.when(F.col("in1"), 0)
-        .when(F.col("in2"), 1)
-        .when(F.col("in3r"), 2)
-        .when(F.col("in3j"), 3)
-        .when(F.col("in5"), 100)
-    )
-    main_sel = (
-        x.withColumn("stage", main_stage).where(F.col("stage").isNotNull()).select(*cols)
-    )
-
-    # ---- global first-wins merge over the few selected rows per query
-    merged = main_sel.unionByName(s4)
-    w_m = Window.partitionBy("query_id", "doc_id").orderBy(F.col("stage").asc())
-    winner = merged.withColumn("mrn", F.row_number().over(w_m)).where(F.col("mrn") == 1)
+    Execution: the probe batch is collected and embedded here (one
+    eager job) and `_lattice_candidates` scores it against the store
+    in one pruned Arrow pass, keeping only the (probe, doc) cells a
+    stage can still select. Every stage window and gate partitions by
+    query_id, so the cascade — ④, the ①②③⑤ ranks and deficit gates,
+    and the first-wins merge — is ONE grouped Arrow pass,
+    `_lattice_select` per query, which reads each candidate once: the
+    global merge after the per-block top-k. Fusion and the final rank
+    stay JVM-side over the selected ~K rows per query. Nothing is
+    persisted."""
+    cand = _lattice_candidates(spark, sf_dir, probes)
+    out = StructType([cand.schema[c] for c in WINNER_COLS])
+    winner = cand.groupBy("query_id").applyInArrow(_lattice_select, out)
 
     # 0.7/0.3 fusion with the compute_ner_similarity overlap, final top-5
     meta = overlap_score(F.col("hr"), F.col("hj"), F.col("lang") == "en")
@@ -829,7 +786,8 @@ def staged_retrieval_v1_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Doc metadata analogues: NER job/region from the deterministic rule
     extractor (same CASE as ner_extract_rule), title = first 30 chars.
-    Same single-window-pass execution shape as the v2 pipeline; the
+    The main-probe stages run in a single window pass over one
+    persisted scored relation; the
     q3 ('domestic','merge') NER set is 8 docs at the driver SF, so the
     hybrid top-up gate genuinely FIRES, and OOV jobs exercise the
     fall-back-to-all branch."""
@@ -1093,22 +1051,13 @@ def _duck_chat_e2e_oracle() -> str:
     return _duck_staged_oracle(qdef_cte=qdef_cte)
 
 
-@query("chat_pipeline_e2e", oracle=_duck_chat_e2e_oracle())
-def chat_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's E1 chat endpoint, text in → ranked results out,
-    as ONE lazy plan with a full oracle: rule-NER over the raw user
-    messages (deterministic twin of main.py:421-439), per-field
-    profile fallback (main.py:443-449), the empty-query guard
-    (main.py:419-426), then the complete v2 relaxation lattice with
-    per-query AND per-synonym query-text embedding, 0.7/0.3 fusion,
-    top-5 (multi_stage_search + llm_rerank, main.py:329-411,452-469).
-    The probe batch — including which stages each query may take — is
-    DERIVED from the messages by Spark and collected once, when the
-    lattice is built (see v2_lattice); the corpus side never leaves
-    the executors."""
+def _chat_probes(spark: SparkSession, msgs: list[tuple]) -> DataFrame:
+    """v2_lattice probes derived from raw (msg_id, user_message,
+    profile_region, profile_job) messages: rule-NER parse, per-field
+    profile fallback, the empty-query guard, then one main probe per
+    message plus one probe per (message, synonym of its job)."""
     req = spark.createDataFrame(
-        CHAT_E2E_MSGS,
-        "msg_id int, user_message string, profile_region string, profile_job string",
+        msgs, "msg_id int, user_message string, profile_region string, profile_job string"
     )
     parsed = req.where(F.col("user_message") != "").select(
         F.col("msg_id").alias("query_id"),
@@ -1135,7 +1084,23 @@ def chat_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(" ", "region", "synonym").alias("ptext"),
         )
     )
-    return v2_lattice(spark, sf_dir, main.unionByName(synp))
+    return main.unionByName(synp)
+
+
+@query("chat_pipeline_e2e", oracle=_duck_chat_e2e_oracle())
+def chat_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's E1 chat endpoint, text in → ranked results out,
+    with a full oracle: rule-NER over the raw user messages
+    (deterministic twin of main.py:421-439), per-field profile fallback
+    (main.py:443-449), the empty-query guard (main.py:419-426), then
+    the complete v2 relaxation lattice with per-query AND per-synonym
+    query-text embedding, 0.7/0.3 fusion, top-5 (multi_stage_search +
+    llm_rerank, main.py:329-411,452-469). The probe batch — including
+    which stages each query may take — is DERIVED from the messages by
+    Spark, then collected and embedded on the driver once, when the
+    lattice is built (see v2_lattice); the corpus side never leaves
+    the executors."""
+    return v2_lattice(spark, sf_dir, _chat_probes(spark, CHAT_E2E_MSGS))
 
 
 @query("staged_retrieval_topk_scale", oracle=_duck_staged_oracle())
